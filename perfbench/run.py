@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Benchmark of the engine on three seeded workloads.
+"""Benchmark of the engine on two seeded workloads.
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> \
         --trace <0|1>
@@ -9,7 +9,7 @@ it generates the workload's inputs from the seed, sets up (a fresh JVM via
 ``session.get_spark`` plus a warm-up pass over the inputs that compiles
 every plan), checks every result of the warm-up pass once against its
 reference, untimed, then runs full passes over the workload's operations
-until ``--seconds`` have elapsed.  Every timed repeat must reproduce the
+that fit in ``--seconds``.  Every timed repeat must reproduce the
 checked result fingerprint.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` alternates
@@ -37,7 +37,7 @@ import time
 T_START = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-MIN_PASSES = 2      # timed passes per run, even past --seconds
+MIN_PASSES = 3      # timed passes per run, even past --seconds
 MAX_CORES = 4
 MAX_MEM_GB = 2      # a fixed, pre-touched heap: repeatable resident size
 
@@ -119,6 +119,18 @@ def _pct(xs: list[float], q: float) -> float:
     lo = int(k)
     hi = min(lo + 1, len(s) - 1)
     return s[lo] + (s[hi] - s[lo]) * (k - lo)
+
+
+def _smoothed_median(xs) -> float:
+    """The median operation latency, smoothed: the mean of the middle
+    three values (four for an even count).  The operations have distinct
+    latency levels and each has only a few samples, so a plain median,
+    pooled or over the per-operation medians, follows the noise of the
+    one operation that happens to sit in the middle."""
+    s = sorted(xs)
+    k = min(len(s), 3 if len(s) % 2 else 4)
+    lo = (len(s) - k) // 2
+    return statistics.fmean(s[lo:lo + k])
 
 
 def _summary(name: str, xs: list[float], unit: str) -> str:
@@ -206,69 +218,80 @@ def run(args, work: str) -> int:
     passes = {False: [], True: []}
     cpus, op_times, windows = [], [], []
     by_op: dict[str, list[float]] = {}
+    # A pass starts only if one as long as the last still ends by the
+    # deadline.  Every timing is a median over passes: the JIT keeps
+    # compiling the planner after the warm-up, so the first timed pass is
+    # often the slowest.
     deadline = time.perf_counter() + args.seconds
-    n = 0
-    with trace.RssSampler(pid) as rss:
-        while n < MIN_PASSES or time.perf_counter() < deadline:
-            traced = bool(args.trace) and n % 2 == 1
-            tracer.enabled = traced
-            order = list(wl.ops)
-            if wl.shuffle:
-                rng.shuffle(order)
-            c0, w0, p0 = trace.tree_cpu_s(pid), time.time(), 0.0
-            for op in order:
-                attempted += 1
-                t0 = time.perf_counter()
-                try:
-                    got = tracer.call(op.layer, op.name, op.run, spark,
-                                      inputs)
-                    ok = op.name in expected and got == expected[op.name]
-                    if not ok:
-                        log(f"[perfbench] WRONG {op.name}: fingerprint "
-                            f"{got} differs from {expected.get(op.name)}")
-                except Exception as ex:
-                    ok = False
-                    log(f"[perfbench] FAILED {op.name}: "
-                        f"{type(ex).__name__}: {str(ex)[:500]}")
-                dt = time.perf_counter() - t0
-                p0 += dt
-                if not traced:
-                    op_times.append(dt)
-                    by_op.setdefault(op.name, []).append(dt)
+    n, last = 0, 0.0
+    trace.reset_peak_rss(pid)
+    while n < MIN_PASSES or time.perf_counter() + last <= deadline:
+        traced = bool(args.trace) and n % 2 == 1
+        tracer.enabled = traced
+        order = list(wl.ops)
+        if wl.shuffle:
+            rng.shuffle(order)
+        c0, w0, p0 = trace.tree_cpu_s(pid), time.time(), 0.0
+        for op in order:
+            attempted += 1
+            t0 = time.perf_counter()
+            try:
+                got = tracer.call(op.layer, op.name, op.run, spark,
+                                  inputs)
+                ok = op.name in expected and got == expected[op.name]
                 if not ok:
-                    failed += 1
-                spark.catalog.clearCache()
-            tracer.enabled = False
-            passes[traced].append(p0)
-            if traced:
-                windows.append((w0, time.time()))
-            else:
-                cpus.append(trace.tree_cpu_s(pid) - c0)
-            n += 1
+                    log(f"[perfbench] WRONG {op.name}: fingerprint "
+                        f"{got} differs from {expected.get(op.name)}")
+            except Exception as ex:
+                ok = False
+                log(f"[perfbench] FAILED {op.name}: "
+                    f"{type(ex).__name__}: {str(ex)[:500]}")
+            dt = time.perf_counter() - t0
+            p0 += dt
+            if not traced:
+                op_times.append(dt)
+                by_op.setdefault(op.name, []).append(dt)
+            if not ok:
+                failed += 1
+            spark.catalog.clearCache()
+        tracer.enabled = False
+        n += 1
+        last = p0
+        passes[traced].append(p0)
+        if traced:
+            windows.append((w0, time.time()))
+        else:
+            cpus.append(trace.tree_cpu_s(pid) - c0)
 
     untraced = passes[False]
-    pass_med = statistics.median(untraced)
+    # A typical pass: each operation at its median latency.  Unlike the
+    # median pass, it drops a hiccup in one operation of one pass and a
+    # hiccup in another operation of another pass alike.
+    op_med = {name: statistics.median(xs) for name, xs in by_op.items()}
+    pass_med = sum(op_med.values())
     e2e = {
         "setup_s": start_s + warmup_s,
         "pass_s": pass_med,
         "input_rows_per_s": wl.units(inputs) / pass_med,
-        "op_s.p50": _pct(op_times, 0.5),
+        "op_s.p50": _smoothed_median(op_med.values()),
         "op_s.p90": _pct(op_times, 0.9),
         "cpu_s": statistics.median(cpus),
-        "peak_rss_mb": rss.peak / 2**20,
+        "peak_rss_mb": trace.tree_peak_rss_bytes(pid) / 2**20,
     }
     log(f"[perfbench] {wl.name}: {len(untraced)} untraced passes, "
         f"{len(op_times)} ops, units/pass {wl.units(inputs)} {wl.unit_name}")
     log(f"  setup_s            {start_s + warmup_s:.4f} s  (start "
         f"{start_s:.4f} s, warm-up {warmup_s:.4f} s)")
-    log(_summary("pass_s", untraced, "s")
+    log(f"  pass_s             {pass_med:.4f} s (sum of per-op medians); "
+        + _summary("passes", untraced, "s").strip()
         + "  [" + " ".join(f"{x:.3f}" for x in untraced) + "]")
     beyond = sum(t > e2e["op_s.p90"] for t in op_times)
     log(_summary("op_s", op_times, "s")
+        + f"  smoothed p50 of per-op medians {e2e['op_s.p50']:.4f} s"
         + f"  p90 {e2e['op_s.p90']:.4f} s with {beyond} samples beyond it")
     log(_summary("cpu_s", cpus, "s"))
-    for name, xs in by_op.items():
-        log(f"    {name:<36} median {statistics.median(xs):.4f} s")
+    for name, med in op_med.items():
+        log(f"    {name:<36} median {med:.4f} s")
     log(f"  error_rate         {failed / attempted:.4f}  "
         f"({failed} of {attempted} ops wrong or failed)")
 
@@ -289,10 +312,11 @@ def run(args, work: str) -> int:
                    if op.layer == "crawler" and op.name in expected]
         layer["crawler.files"] = sum(c[1] for c in crawled)
         layer["crawler.files_failed"] = sum(c[2] for c in crawled)
-        overhead = statistics.median(passes[True]) - pass_med
-        log(f"[perfbench] tracing overhead {overhead:+.4f} s per pass "
-            f"(traced {statistics.median(passes[True]):.4f} s, "
-            f"untraced {pass_med:.4f} s)")
+        traced_s = statistics.median(passes[True])
+        untraced_s = statistics.median(untraced)
+        log(f"[perfbench] tracing overhead {traced_s - untraced_s:+.4f} s "
+            f"per pass (median traced pass {traced_s:.4f} s, untraced "
+            f"{untraced_s:.4f} s)")
         for k in sorted(layer):
             if layer[k]:
                 log(f"  {k:<42} {layer[k]:.6g}")

@@ -19,7 +19,6 @@ import itertools
 import json
 import os
 import sys
-import threading
 import time
 from collections import defaultdict
 from dataclasses import dataclass, field
@@ -49,7 +48,6 @@ LAYER_CLASSES = {"crawler": ["crawler.Crawler"], "pool": ["pool.Pool"]}
 # ---- procfs ----------------------------------------------------------------
 
 _TICK = os.sysconf("SC_CLK_TCK")
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _stat_fields(pid: int) -> list[str] | None:
@@ -87,42 +85,32 @@ def tree_cpu_s(root: int) -> float:
     return total / _TICK
 
 
-def tree_rss_bytes(pids: list[int]) -> int:
-    total = 0
-    for p in pids:
+def reset_peak_rss(root: int) -> None:
+    """Restart the kernel's resident-size high-water mark of the tree."""
+    for p in tree_pids(root):
         try:
-            with open(f"/proc/{p}/statm") as fh:
-                total += int(fh.read().split()[1]) * _PAGE
+            with open(f"/proc/{p}/clear_refs", "w") as fh:
+                fh.write("5")
+        except OSError:
+            pass
+
+
+def tree_peak_rss_bytes(root: int) -> int:
+    """Sum over the live tree of each process's peak resident size since
+    ``reset_peak_rss`` (or since it started).  The kernel keeps the peak,
+    so no sampling is needed, and a short-lived child that shares its
+    parent's address space between fork and exec is not counted twice."""
+    total = 0
+    for p in tree_pids(root):
+        try:
+            with open(f"/proc/{p}/status") as fh:
+                for line in fh:
+                    if line.startswith("VmHWM:"):
+                        total += int(line.split()[1]) * 1024
+                        break
         except OSError:
             pass
     return total
-
-
-class RssSampler:
-    """Background sampler of the process tree's resident memory."""
-
-    def __init__(self, root: int, every_s: float = 0.25):
-        self.root, self.every = root, every_s
-        self.peak = 0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self):
-        pids, n = tree_pids(self.root), 0
-        while not self._stop.is_set():
-            if n % 8 == 0:
-                pids = tree_pids(self.root)
-            self.peak = max(self.peak, tree_rss_bytes(pids))
-            n += 1
-            self._stop.wait(self.every)
-
-    def __enter__(self):
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join()
 
 
 # ---- spans -----------------------------------------------------------------

@@ -146,10 +146,13 @@ def truth_op(name: str, layer: str, run, truth: Callable[[Inputs], Any]) -> Op:
 _SCHEMA = T.StructType([T.StructField("data", T.LongType())])
 
 
-def _make_crawl(root: str, seed: int) -> Inputs:
-    d = os.path.join(root, "tree")
-    truth = gen.write_crawl_tree(d, seed, CRAWL_FILES)
-    return Inputs(crawl=d, truth=truth, rows={"files": truth.n_files})
+def _make_corpus(root: str, seed: int) -> Inputs:
+    """The curation tables plus the JSON tree the crawl ops read."""
+    inp = _make_tables(CORPUS_SIZES)(root, seed)
+    inp.crawl = os.path.join(root, "tree")
+    inp.truth = gen.write_crawl_tree(inp.crawl, seed, CRAWL_FILES)
+    inp.rows["files"] = inp.truth.n_files
+    return inp
 
 
 def _cores(spark) -> int:
@@ -230,24 +233,21 @@ CORPUS_QUERIES = (
 def all_workloads() -> dict[str, Workload]:
     ws = [
         Workload(
-            "crawl_tree",
-            "the reference's own workload: per-file listing and open "
-            "dominate, operators stay idle",
-            _make_crawl,
+            "corpus_curation",
+            "ingest and curation: the reference's crawl of a tree of tiny "
+            "JSON files, bound by per-file listing and open, then the "
+            "LLM-data pipeline, bound by executor CPU in text, dedup and "
+            "similarity kernels",
+            _make_corpus,
             [truth_op("sources_list_files", "sources", _list_files,
                       lambda inp: tuple(sorted(_files(inp.crawl)))),
              truth_op("crawl_native", "crawler", _crawl(False), _crawl_truth),
              truth_op("crawl_fs_seam", "crawler", _crawl(True), _crawl_truth),
              truth_op("pool_accumulate", "pool", _pool_accumulate,
-                      _true_depths)],
-            lambda inp: inp.rows["files"], "files"),
-        Workload(
-            "corpus_curation",
-            "LLM-data pipeline sized to be data-bound: executor CPU in "
-            "text, dedup and similarity kernels",
-            _make_tables(CORPUS_SIZES),
-            [query_op(n) for n in CORPUS_QUERIES],
-            lambda inp: inp.rows["documents"], "docs"),
+                      _true_depths)]
+            + [query_op(n) for n in CORPUS_QUERIES],
+            lambda inp: inp.rows["documents"] + inp.rows["files"],
+            "docs + files"),
         Workload(
             "tpch_interactive",
             "short relational, window, as-of and sessionize queries bound "
