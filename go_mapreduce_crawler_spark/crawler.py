@@ -5,17 +5,25 @@ Semantics reproduced (SURVEY.md §2.1 op 6, §2.2 error-handling row):
 
 * Recursively enumerate all files under ``root`` (List + Searcher).
 * JSON-decode each file into a record of caller-declared schema
-  (Transform; crawler.go:158-201).  Unknown fields dropped, missing
-  fields -> zero values — matched via PERMISSIVE parse + coalesce.
+  (Transform; crawler.go:158-201).  Both read paths — Spark's connectors
+  and the pluggable FileSystem seam — produce the same ``(_file,
+  content)`` frame, one row per file, and ONE decoder (``_decode``) turns
+  it into records: ``from_json`` in PERMISSIVE mode, the Spark analogue of
+  one ``json.Decoder.Decode`` per file.  Like Go, it decodes the first
+  JSON value of the file (a pretty-printed object is one record, trailing
+  objects are ignored); a body that is not an object, or a field of the
+  wrong type (string or bool or ``1.5`` in an integer field), fails the
+  whole file.  Unknown fields are dropped, missing fields -> zero values.
 * A malformed / unreadable file contributes the **neutral element** (Go
   zero value) and the pipeline continues (crawler.go:173-199).  The
   reference's error matrix (crawler_test.go:395-455) distinguishes five
   failure kinds — open-panic, open-error, read-error, readdir-panic,
   readdir-error — all with the same contract: neutral element + recorded
   error + pipeline continues.  Spark-side mapping: decode failures ride
-  the PERMISSIVE ``_corrupt_record`` channel; I/O-unreadable files are
-  skipped by the scan (``ignoreCorruptFiles``) and restored as neutral
-  elements by anti-joining the listing (see ``collect``).
+  the PERMISSIVE ``_corrupt_record`` channel; files the native scan
+  cannot read are skipped by it (``ignoreCorruptFiles``) and restored as
+  neutral elements by left-joining the listing onto the decoded rows;
+  seam ``open`` failures arrive as null content (see ``collect``).
 * Fold records into partial aggregates, combine partials into one final
   result (Accumulate + Combine; monoid contract crawler.go:31, 41-43) —
   Spark's partial+final HashAggregate implements exactly this contract.
@@ -25,10 +33,19 @@ Semantics reproduced (SURVEY.md §2.1 op 6, §2.2 error-handling row):
   contract is "any one error", which we satisfy deterministically with
   the lexicographically-first corrupt file path.
 
-Scale design: the whole crawl is ONE Spark job — distributed listing,
+Known differences from Go's decoder:
+
+* Spark's file scan skips zero-length files, so the native path does not
+  count them; the seam path counts each one as a corrupt file (Go fails
+  to decode an empty stream).
+* A JSON ``null`` body is flagged corrupt; Go decodes it to the zero
+  value with no error.
+
+Scale design: the native crawl is ONE Spark job — distributed listing,
 pipelined scan+decode+partial-agg in each task, one shuffle to the final
 agg.  Nothing is materialized on the driver except the final row, so the
-same code handles 3 files or 3 billion.
+same code handles 3 files or 3 billion.  The seam path lists on the
+driver (only paths) and reads in executor tasks.
 """
 
 from __future__ import annotations
@@ -40,8 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .sources.crawl import list_files_bfs
-from .sources.pyfs import FileSystem
+from .sources.pyfs import FileSystem, read_files, walk
 
 _CORRUPT = "_corrupt_record"
 
@@ -59,11 +75,13 @@ def _norm_path(col: Column) -> Column:
 class CrawlConfig:
     """Parity with reference Configuration (crawler.go:17-21).
 
-    Worker counts map to Spark parallelism knobs rather than goroutine
-    counts: listing/decoding parallelism is one task per input split, and
-    ``accumulator_workers`` bounds partial-aggregation parallelism via an
-    explicit repartition (only applied when the caller asks — Spark's
-    default task-per-split is usually the right answer).
+    The native path reads and decodes one task per input split, so the
+    two worker counts only shape the FileSystem-seam path:
+    ``search_workers`` threads list each BFS level of the seam walk, and
+    ``file_workers`` partitions read the listed files.
+    ``accumulator_workers`` bounds partial-aggregation parallelism on
+    both paths via an explicit repartition (only applied when the caller
+    asks — Spark's default task-per-split is usually the right answer).
     """
     search_workers: int = 32
     file_workers: int = 32
@@ -92,6 +110,32 @@ def zero_value(dt: T.DataType) -> Any:
     return _ZEROS.get(dt)
 
 
+def _decode(frame: DataFrame, schema: T.StructType) -> DataFrame:
+    """``(_file, content)`` -> one record row per file + ``_is_corrupt``.
+
+    One ``from_json`` per file, the analogue of the reference's one
+    ``json.Decoder.Decode`` per file (crawler.go:189-199).  Null content
+    (an unreadable file), a body that decodes to no object, and a set
+    corrupt-record column all mark the file corrupt, and then every field
+    is null: Go discards the whole value on a decode error, even the
+    fields it had already filled.  ``collect`` turns nulls into zero
+    values.
+    """
+    rec = F.from_json(
+        "content",
+        T.StructType(list(schema.fields)
+                     + [T.StructField(_CORRUPT, T.StringType(), True)]),
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT})
+    parsed = frame.select("_file", rec.alias("_rec"))
+    corrupt = F.col("_rec").isNull() | F.col("_rec")[_CORRUPT].isNotNull()
+    return parsed.select(
+        *[F.when(~corrupt, F.col("_rec")[f_.name]).alias(f_.name)
+          for f_ in schema.fields],
+        corrupt.alias("_is_corrupt"),
+        "_file",
+    )
+
+
 class Crawler:
     """Compose List -> Transform -> Accumulate -> Combine over a JSON tree."""
 
@@ -99,116 +143,49 @@ class Crawler:
         self.spark = spark
         self.config = config or CrawlConfig()
 
-    def read_records(self, root: str, schema: T.StructType,
-                     skip_unreadable: bool = False) -> DataFrame:
-        """Transform stage: every file under root -> one record row.
+    def read_records(self, root: str) -> DataFrame:
+        """Native read: every file under root -> one ``(_file, content)``
+        row, the whole file as one string (the reference's
+        one-JSON-object-per-file model, crawler.go:189-199).
 
-        PERMISSIVE mode + ``_corrupt_record`` reproduces "bad record keeps
-        flowing"; corrupt rows carry nulls which ``collect`` coalesces to
-        zero values so they contribute the neutral element.
-        ``wholetext=true`` matches the reference's one-JSON-object-per-file
-        model (crawler.go:189-199).
-
-        ``skip_unreadable`` maps the reference's open-error / read-error
-        kinds (crawler.go:173-199): I/O failures mid-scan (truncated
-        gzip, permission denial, file vanished after listing) drop the
-        file from THIS frame instead of failing the job; ``collect``
-        restores each as a neutral element by diffing the listing.
+        ``wholetext`` is passed to ``text()`` itself, which would
+        otherwise reset it to false.  Files the scan cannot read (the
+        reference's open-error / read-error kinds, crawler.go:173-199:
+        truncated gzip, permission denial, file vanished after listing)
+        are dropped from this frame instead of failing the job;
+        ``collect`` restores each as a neutral element by diffing the
+        listing.
         """
-        read_schema = T.StructType(
-            list(schema.fields) + [T.StructField(_CORRUPT, T.StringType(), True)]
-        )
-        flag = "true" if skip_unreadable else "false"
         return (
-            self.spark.read.schema(read_schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", _CORRUPT)
-            .option("wholetext", "true")
+            self.spark.read
             .option("recursiveFileLookup", "true")
-            .option("ignoreCorruptFiles", flag)
-            .option("ignoreMissingFiles", flag)
-            .json(root)
-            .withColumn("_file", F.input_file_name())
+            .option("ignoreCorruptFiles", "true")
+            .option("ignoreMissingFiles", "true")
+            .text(root, wholetext=True)
+            .select(_norm_path(F.input_file_name()).alias("_file"),
+                    F.col("value").alias("content"))
         )
 
-    def read_records_fs(
-        self, root: str, schema: T.StructType, filesystem: FileSystem,
-    ) -> tuple[DataFrame, list[tuple[str, str]]]:
-        """Transform stage over a PLUGGABLE FileSystem (the reference's
-        fs.FileSystem seam, internal/fs/filesystem.go:19-41 — the hook
-        its whole error-injection matrix runs through).
-
-        Listing runs the level-synchronous BFS with the seam's
-        ``read_dir`` (readdir failures recorded, subtree skipped, crawl
-        continues); reads+decodes run in Arrow-batched tasks with the
-        filesystem object shipped in the closure — one task per
-        ``file_workers`` slice, the Spark analogue of the reference
-        handing the FileSystem to each worker goroutine.  A file whose
-        ``open`` raises or whose JSON doesn't decode to the declared
-        field types yields a ``_is_corrupt`` row (Go json.Decode fails
-        the whole file -> zero value, crawler.go:189-199).
-
-        Use the Spark-native ``read_records`` for any storage Spark has a
-        connector for — this seam is for custom/virtual filesystems and
-        fault injection.
-        """
-        files, dir_errors = list_files_bfs(
-            self.spark, root, workers=self.config.search_workers,
-            searcher=filesystem.read_dir, on_error="record")
-
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField("_is_corrupt", T.BooleanType(), False),
-               T.StructField("_file", T.StringType(), False)])
-        if not files:
-            return self.spark.createDataFrame([], out_schema), dir_errors
-
-        _OK_TYPES = {
-            T.LongType(): int, T.IntegerType(): int, T.ShortType(): int,
-            T.ByteType(): int, T.DoubleType(): (int, float),
-            T.FloatType(): (int, float), T.StringType(): str,
-            T.BooleanType(): bool,
-        }
-        fields = [(f_.name, _OK_TYPES.get(f_.dataType)) for f_ in schema.fields]
-
+    def _read_fs(self, files: list[str], filesystem: FileSystem) -> DataFrame:
+        """Seam read: one ``(_file, content)`` row per listed file, opened
+        through ``filesystem`` in ``file_workers`` tasks (the reference
+        hands the FileSystem to each worker goroutine).  A raising
+        ``open`` gives null content, which ``_decode`` marks corrupt."""
         def kernel(batches):
-            import json as _json
-
-            import pandas as _pd
+            import pandas as pd
 
             for pdf in batches:
-                rows = []
-                for p in pdf["_file"]:
-                    row: dict[str, Any] = {name: None for name, _ in fields}
-                    corrupt = False
-                    try:
-                        obj = _json.loads(filesystem.open(p))
-                        if not isinstance(obj, dict):
-                            raise ValueError("not a JSON object")
-                        for name, ok in fields:
-                            v = obj.get(name)
-                            if v is None:
-                                continue  # missing field -> zero, not error
-                            if ok is not None and (not isinstance(v, ok)
-                                                   or isinstance(v, bool)
-                                                   and ok is not bool):
-                                raise ValueError(f"field {name}: bad type")
-                            row[name] = v
-                    except Exception:
-                        corrupt = True
-                        row = {name: None for name, _ in fields}
-                    row["_is_corrupt"] = corrupt
-                    row["_file"] = p
-                    rows.append(row)
-                yield _pd.DataFrame(
-                    rows, columns=[n for n, _ in fields] + ["_is_corrupt", "_file"])
+                yield pd.DataFrame(
+                    [(p, content) for p, content, _
+                     in read_files(filesystem, pdf["_file"])],
+                    columns=["_file", "content"])
 
-        paths = self.spark.createDataFrame(
-            [(p,) for p in files], T.StructType(
-                [T.StructField("_file", T.StringType(), False)]))
+        paths = self.spark.createDataFrame([(p,) for p in files],
+                                           "_file string")
         n_parts = max(1, min(self.config.file_workers, len(files)))
-        return (paths.repartition(n_parts).mapInPandas(kernel, out_schema),
-                dir_errors)
+        return (paths.repartition(n_parts)
+                .mapInPandas(kernel, "_file string, content binary")
+                .withColumn("content", F.col("content").cast("string")))
 
     def collect(
         self,
@@ -227,47 +204,28 @@ class Crawler:
 
         Unreadable files (reference open-error/read-error kinds): the
         scan skips them (``ignoreCorruptFiles``), and a metadata-only
-        listing anti-joined against the scanned ``_file`` set restores
-        each as a neutral-element row with a recorded error — the
-        reference contract for all five failure kinds
-        (crawler_test.go:395-455).  The diff join shuffles only file
-        PATHS (never payloads), so at a million files it moves megabytes.
+        listing left-joined onto the decoded rows restores each as a
+        neutral-element row with a recorded error — the reference
+        contract for all five failure kinds (crawler_test.go:395-455).
+        Decoding happens before the join, so it shuffles only file PATHS
+        and scalar fields (never payloads): at a million files it moves
+        megabytes.
 
         ``filesystem``: route listing + reading through a pluggable
-        FileSystem (``read_records_fs``) instead of Spark's connectors —
-        the reference's fs.FileSystem seam.  readdir failures are
-        recorded and the crawl continues.
+        FileSystem instead of Spark's connectors — the reference's
+        fs.FileSystem seam.  The listing is ``pyfs.walk`` on the driver
+        (readdir failures are recorded and the crawl continues); the
+        reads run in executor tasks and are decoded by the same
+        ``_decode`` as the native path.
         """
-        # Neutral-element semantics: null (corrupt or missing) -> zero value.
-        clean_cols = []
-        for f_ in schema.fields:
-            z = zero_value(f_.dataType)
-            col = F.col(f_.name)
-            if z is not None:
-                col = F.coalesce(col, F.lit(z).cast(f_.dataType))
-            clean_cols.append(col.alias(f_.name))
-
         dir_errors: list[tuple[str, str]] = []
-        if filesystem is not None:
-            records, dir_errors = self.read_records_fs(root, schema, filesystem)
-            clean = records.select(*clean_cols, "_is_corrupt", "_file")
-        else:
-            records = self.read_records(root, schema, skip_unreadable=True)
-            clean = records.select(
-                *clean_cols,
-                F.col(_CORRUPT).isNotNull().alias("_is_corrupt"),
-                _norm_path(F.col("_file")).alias("_file"),
-            )
+        if filesystem is None:
             # Files the scan could not read at all (vs decode failures,
             # which arrive as _corrupt_record rows): one LEFT join from
-            # the metadata-only listing onto the scanned rows, so the
-            # JSON corpus is planned exactly once (an anti-join + union
-            # referenced `clean` twice, re-running the scan+decode in
-            # the same job).  Unmatched listed files coalesce to the
-            # neutral element with _is_corrupt=true — identical rows to
-            # the old union, same multiplicity for matched files.  The
-            # join shuffles paths and already-aggregatable scalar fields,
-            # never payloads.  BOTH join sides use input_file_name() so
+            # the metadata-only listing onto the decoded rows, so the
+            # JSON corpus is planned exactly once.  Unmatched listed
+            # files get null fields and _is_corrupt, i.e. the neutral
+            # element below.  BOTH join sides use input_file_name() so
             # the keys carry the same URI encoding (binaryFile's `path`
             # column does NOT percent-encode, input_file_name does — a
             # file with a space would otherwise be counted scanned AND
@@ -275,14 +233,22 @@ class Crawler:
             listed = (self.spark.read.format("binaryFile")
                       .option("recursiveFileLookup", "true").load(root)
                       .select(_norm_path(F.input_file_name()).alias("_file")))
-            clean = listed.join(clean, "_file", "left").select(
-                *[F.coalesce(F.col(f_.name),
-                             F.lit(zero_value(f_.dataType)).cast(f_.dataType))
-                  .alias(f_.name) for f_ in schema.fields],
-                F.coalesce(F.col("_is_corrupt"), F.lit(True))
-                 .alias("_is_corrupt"),
-                F.col("_file"),
-            )
+            records = listed.join(_decode(self.read_records(root), schema),
+                                  "_file", "left")
+        else:
+            files, dir_errors = walk(filesystem, root,
+                                     workers=self.config.search_workers)
+            records = _decode(self._read_fs(files, filesystem), schema)
+
+        # Neutral-element semantics: null (corrupt, unread or missing
+        # field) -> zero value.
+        clean = records.select(
+            *[F.coalesce(F.col(f_.name),
+                         F.lit(zero_value(f_.dataType)).cast(f_.dataType))
+              .alias(f_.name) for f_ in schema.fields],
+            F.coalesce(F.col("_is_corrupt"), F.lit(True)).alias("_is_corrupt"),
+            "_file",
+        )
 
         if self.config.accumulator_workers:
             clean = clean.repartition(self.config.accumulator_workers)

@@ -5,31 +5,19 @@ internal/workerpool/pool.go:168-196 and internal/filecrawler/crawler.go:113-155)
 level-synchronous BFS over a directory tree with a worker pool per level;
 directories become the next BFS level, files are streamed to the map stage.
 
-Spark-first realization:
+``list_files`` is the production path.  It delegates to Spark's own
+distributed listing (``InMemoryFileIndex``) via ``recursiveFileLookup``; on
+a cluster this parallelizes across executors once the directory count
+passes ``spark.sql.sources.parallelPartitionDiscovery.threshold``.  This is
+what every real read in the engine uses.
 
-* ``list_files`` — the production path.  Delegates to Spark's own
-  distributed listing (``InMemoryFileIndex``) via
-  ``recursiveFileLookup``; on a cluster this parallelizes across executors
-  once the directory count passes
-  ``spark.sql.sources.parallelPartitionDiscovery.threshold``.  This is what
-  every real read in the engine uses.
-
-* ``list_files_bfs`` — the explicit parity implementation of the
-  level-synchronous algorithm, kept for (a) custom filesystems Spark has no
-  connector for and (b) demonstrating the operator itself.  Each BFS level
-  is an RDD of directory paths fanned out over ``workers`` partitions; each
-  task lists its directories (the Searcher), partitions entries into
-  files/dirs, and the dirs feed the next level.  The per-level barrier
-  matches the reference's ``wg.Wait()`` (pool.go:182).  Scale note: at
-  cluster scale the level fan-out is bounded by directory count, exactly
-  like the reference's worker pool; file paths never pass through the
-  driver except as the per-level frontier (dirs only, not files), which is
-  the same driver-side frontier Spark's own parallel listing keeps.
+Storage Spark has no connector for goes through the pluggable FileSystem
+seam instead, whose listing is the driver-side level-synchronous walk
+``pyfs.walk`` (threads per level, the reference's ``wg.Wait()`` barrier
+between levels).
 """
 
 from __future__ import annotations
-
-from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,69 +29,3 @@ def list_files(spark: SparkSession, root: str, glob: str | None = None) -> DataF
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(root).select("path")
-
-
-def _default_searcher(path: str) -> tuple[list[str], list[str]]:
-    """Searcher: list one directory -> (subdirs, files).
-
-    Parity with reference crawler.go:120-154 (dir/file split at 138-152);
-    delegates to the canonical LocalFileSystem so the dir/file split has
-    exactly one implementation.
-    """
-    from .pyfs import LocalFileSystem
-    return LocalFileSystem().read_dir(path)
-
-
-def list_files_bfs(
-    spark: SparkSession,
-    root: str,
-    workers: int = 32,
-    searcher: Callable[[str], tuple[list[str], list[str]]] | None = None,
-    on_error: str = "raise",
-) -> list[str] | tuple[list[str], list[tuple[str, str]]]:
-    """Level-synchronous BFS listing (reference pool.go:168-196 semantics).
-
-    Returns the full list of file paths.  Only directory paths (the
-    frontier) transit the driver between levels; file paths are collected
-    at the end — callers that need true no-driver-materialization use
-    ``list_files`` instead.
-
-    ``on_error="record"``: a raising searcher (the reference's
-    readdir-error / readdir-panic kinds, crawler_test.go:417-427) records
-    ``(dir_path, message)`` instead of failing the job — that directory's
-    subtree is unreachable, everything else continues — and the return
-    becomes ``(files, errors)``.
-    """
-    searcher = searcher or _default_searcher
-    sc = spark.sparkContext
-    frontier = [root]
-    all_files: list[str] = []
-    errors: list[tuple[str, str]] = []
-    record = on_error == "record"
-
-    def search_partition(
-        paths: Iterable[str],
-    ) -> Iterator[tuple[list[str], list[str], tuple[str, str] | None]]:
-        for p in paths:
-            if record:
-                try:
-                    dirs, files = searcher(p)
-                except Exception as ex:  # readdir-error/panic -> recorded
-                    yield [], [], (p, f"{p}: {ex}")
-                    continue
-                yield dirs, files, None
-            else:
-                dirs, files = searcher(p)
-                yield dirs, files, None
-
-    while frontier:
-        n_parts = max(1, min(workers, len(frontier)))
-        level = (sc.parallelize(frontier, n_parts)
-                 .mapPartitions(search_partition)
-                 .collect())
-        frontier = [d for dirs, _, _ in level for d in dirs]
-        all_files.extend(f for _, files, _ in level for f in files)
-        errors.extend(pair for _, _, pair in level if pair)
-    if record:
-        return sorted(all_files), sorted(errors)
-    return sorted(all_files)

@@ -46,6 +46,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     StringEndsWith, StringStartsWith,
                                     WriterCommitMessage)
 
+from .pyfs import read_files, walk
+
 DEFAULT_FS = "go_mapreduce_crawler_spark.sources.pyfs:LocalFileSystem"
 SCHEMA = "path string, content binary, error string"
 
@@ -53,30 +55,6 @@ SCHEMA = "path string, content binary, error string"
 def _load_fs(spec: str):
     mod, _, cls = spec.partition(":")
     return getattr(import_module(mod), cls)()
-
-
-def _local_bfs(fs, root, descend=None):
-    """Driver-side BFS through the FS seam — the ONE listing loop both
-    the batch reader and the stream reader use.  Returns ``(files,
-    errors)`` with errors as ``(dir_path, message)`` pairs (readdir
-    failures skip the subtree, the walk continues — the reference's
-    readdir-error contract).  ``descend(dir) -> bool`` prunes subtrees
-    (filter pushdown)."""
-    files: list[str] = []
-    errors: list[tuple[str, str]] = []
-    frontier = [root] if descend is None or descend(root) else []
-    while frontier:
-        nxt: list[str] = []
-        for d in frontier:
-            try:
-                dirs, fls = fs.read_dir(d)
-            except Exception as ex:
-                errors.append((d, f"{d}: {ex}"))
-                continue
-            nxt.extend(s for s in dirs if descend is None or descend(s))
-            files.extend(fls)
-        frontier = nxt
-    return sorted(files), sorted(errors)
 
 
 class CrawlDataSource(DataSource):
@@ -143,8 +121,8 @@ class CrawlReader(DataSourceReader):
         consumed path filters bind error rows as well (SQL semantics —
         a readdir-error row whose dir path fails the filter is dropped);
         query without path filters for full error visibility."""
-        files, errors = _local_bfs(self._fs(), self.root,
-                                   descend=self._could_contain)
+        files, errors = walk(self._fs(), self.root,
+                             descend=self._could_contain)
         files = [f for f in files if self._match(f)]
         errors = [e for e in errors if self._match(e[0])]
         parts = [InputPartition(("files", files[i:i + self.chunk]))
@@ -159,12 +137,7 @@ class CrawlReader(DataSourceReader):
             for path, msg in payload:
                 yield (path, None, f"readdir error: {msg}")
             return
-        fs = self._fs()
-        for path in payload:
-            try:
-                yield (path, fs.open(path), None)
-            except Exception as ex:  # open-error/open-panic -> row + error
-                yield (path, None, f"open error: {path}: {ex}")
+        yield from read_files(self._fs(), payload)
 
 
 class PushdownCrawlReader(CrawlReader):
@@ -239,15 +212,10 @@ class CrawlStreamReader(SimpleDataSourceStreamReader):
         return {"seen": []}
 
     def _list(self):
-        return _local_bfs(self._fs(), self.root)
+        return walk(self._fs(), self.root)
 
     def _rows(self, paths):
-        fs = self._fs()
-        for path in paths:
-            try:
-                yield (path, fs.open(path), None)
-            except Exception as ex:
-                yield (path, None, f"open error: {path}: {ex}")
+        return read_files(self._fs(), paths)
 
     def read(self, start: dict):
         # iter(list), not a generator: Spark's prefetch cache both

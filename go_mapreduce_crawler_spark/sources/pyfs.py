@@ -22,12 +22,19 @@ Contract (mirrors filesystem.go):
   crawler.go:189-199).  May raise; the crawler substitutes the neutral
   element and records the error (open-error/read-error kinds).
 * ``join(*parts) -> str`` — path join (filesystem.go Join).
+
+The two loops every seam consumer shares live here: ``walk`` (the
+listing — ``Crawler.collect`` and the ``crawl`` data source's batch and
+stream readers) and ``read_files`` (the reads — the same three callers).
+Neither decodes anything: the crawler decodes the bytes in Spark, the
+data source hands them to the query as the ``content`` column.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Protocol, runtime_checkable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable, Iterator, Protocol, runtime_checkable
 
 
 @runtime_checkable
@@ -103,3 +110,55 @@ class LocalFileSystem:
 
     def rename(self, src: str, dst: str) -> None:
         os.replace(src, dst)
+
+
+def walk(
+    fs: FileSystem,
+    root: str,
+    workers: int = 1,
+    descend: Callable[[str], bool] | None = None,
+) -> tuple[list[str], list[tuple[str, str]]]:
+    """Level-synchronous BFS through the seam (the reference's List +
+    Searcher, pool.go:168-196 and crawler.go:113-155).
+
+    Each level's directories are listed by up to ``workers`` threads; the
+    next level starts only once every listing of this one has returned —
+    the reference's ``wg.Wait()`` barrier (pool.go:182).  Returns sorted
+    ``(files, errors)``, errors as ``(dir_path, message)`` pairs: a
+    raising ``read_dir`` (readdir-error/readdir-panic kinds,
+    crawler_test.go:417-427) skips that subtree and the walk continues.
+    ``descend(dir) -> bool`` prunes subtrees (filter pushdown)."""
+    def list_dir(d: str):
+        try:
+            return fs.read_dir(d), None
+        except Exception as ex:  # readdir-error/panic -> recorded
+            return None, (d, f"{d}: {ex}")
+
+    files: list[str] = []
+    errors: list[tuple[str, str]] = []
+    frontier = [root] if descend is None or descend(root) else []
+    with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
+        while frontier:
+            nxt: list[str] = []
+            for listing, err in pool.map(list_dir, frontier):
+                if err is not None:
+                    errors.append(err)
+                    continue
+                dirs, fls = listing
+                nxt.extend(s for s in dirs if descend is None or descend(s))
+                files.extend(fls)
+            frontier = nxt
+    return sorted(files), sorted(errors)
+
+
+def read_files(
+    fs: FileSystem, paths: Iterable[str],
+) -> Iterator[tuple[str, bytes | None, str | None]]:
+    """``(path, content, error)`` per path, in order.  A raising ``open``
+    (open-error/open-panic kinds) yields null content and an
+    ``open error: …`` message, and the loop moves on to the next file."""
+    for path in paths:
+        try:
+            yield path, fs.open(path), None
+        except Exception as ex:
+            yield path, None, f"open error: {path}: {ex}"

@@ -16,7 +16,8 @@ from pyspark.sql import types as T
 
 from go_mapreduce_crawler_spark.crawler import Crawler, CrawlConfig
 from go_mapreduce_crawler_spark.pool import Pool
-from go_mapreduce_crawler_spark.sources.crawl import list_files_bfs, list_files
+from go_mapreduce_crawler_spark.sources.crawl import list_files
+from go_mapreduce_crawler_spark.sources.pyfs import LocalFileSystem, walk
 
 SCHEMA = T.StructType([T.StructField("data", T.LongType())])
 
@@ -107,10 +108,54 @@ def test_accumulator_workers_config(spark, grid_tree):
     assert res.value == {"data_sum": 100}
 
 
-def test_list_files_bfs(spark, golden_tree):
-    files = list_files_bfs(spark, golden_tree, workers=4)
-    assert len(files) == 3
-    assert all(f.endswith(".json") for f in files)
+def test_walk_levels_workers_and_readdir_errors(grid_tree):
+    """pyfs.walk, the seam's level-synchronous BFS (pool.go:168-196):
+    the thread count per level changes nothing in the sorted result, and
+    a raising read_dir is recorded while only its subtree is skipped."""
+    one = walk(LocalFileSystem(), grid_tree, workers=1)
+    four = walk(LocalFileSystem(), grid_tree, workers=4)
+    assert one == four
+    files, errors = four
+    assert len(files) == 100 and files == sorted(files) and errors == []
+
+    files, errors = walk(_faulty_fs(dir_fail=("/dir3",)), grid_tree, workers=4)
+    assert len(files) == 90
+    assert not any("/dir3/" in f for f in files)
+    assert [d for d, _ in errors] == [f"{grid_tree}/dir3"]
+    assert "injected ReadDir error" in errors[0][1]
+
+
+# One file per case -> Go json.Decoder.Decode into
+# struct{Data int64; Flag bool} (crawler.go:189-199), whose error makes the
+# crawler keep the zero value: (data_sum, n_files, n_corrupt).
+_DECODE_SCHEMA = T.StructType([T.StructField("data", T.LongType()),
+                               T.StructField("flag", T.BooleanType())])
+_DECODE_CASES = {
+    "pretty_object": ('{\n  "data": 7\n}\n', (7, 1, 0)),
+    "two_objects": ('{"data": 1}\n{"data": 2}\n', (1, 1, 0)),
+    "top_level_array": ('[{"data": 1}, {"data": 2}]', (0, 1, 1)),
+    "scalar": ("5", (0, 1, 1)),
+    "string_in_long": ('{"data": "7"}', (0, 1, 1)),
+    "true_in_long": ('{"data": true}', (0, 1, 1)),
+    "float_in_long": ('{"data": 1.5}', (0, 1, 1)),
+    "good_field_then_bad": ('{"data": 3, "flag": 1}', (0, 1, 1)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DECODE_CASES))
+def test_native_and_seam_decode_alike(spark, tmp_path, case):
+    """Both Crawler paths decode a file the way Go's json.Decoder does:
+    the first JSON value, which must be an object whose fields have the
+    declared types — anything else fails the whole file, including the
+    fields that did decode."""
+    body, want = _DECODE_CASES[case]
+    root = str(tmp_path / case)
+    _write(f"{root}/f.json", body)
+    got = []
+    for fs in (None, LocalFileSystem()):
+        res = Crawler(spark).collect(root, _DECODE_SCHEMA, filesystem=fs)
+        got.append((res.value["data_sum"], res.n_files, res.n_corrupt))
+    assert got == [want, want]
 
 
 def test_list_files_spark_native(spark, golden_tree):
