@@ -1260,7 +1260,7 @@ def _substring_report(spark, sf_dir, checkpoint_rounds: bool = True):
     materialize inside the query's own first job, so the rounds
     pipeline instead of running as serialized eager jobs — measured
     9.3s vs 19.7s cold at the 50k-doc Zipf probe (tools/
-    scale_probe_r08.py fixture) for identical results.  Per-round
+    scale_probe_r08.json) for identical results.  Per-round
     materialization of the position relation is the standard
     external-memory suffix-array trade; each round is still
     shuffle-linear in N."""

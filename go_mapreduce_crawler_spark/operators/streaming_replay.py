@@ -7,7 +7,7 @@ stateful.py) were parity-tested against their batch twins but had no
 driver CORRECTNESS rows.  Each query here replays the events table as a
 deterministic multi-file stream (maxFilesPerTrigger=1 under an
 availableNow trigger => one micro-batch per file, so the later batches
-exercise the full-outer snapshot merge), then returns the FINALIZED
+exercise the union + group-by snapshot merge), then returns the FINALIZED
 view as a plain DataFrame.
 
 Why a full value oracle is legitimate for a streaming operator: the
@@ -572,7 +572,23 @@ def q_stream_stream_join_replay(spark, sf_dir):
     Output gap rides as BIGINT epoch-micro difference (TZ-exact in
     both engines).
     """
-    stream = _replay_ordered_events(spark, sf_dir, "ssjoin")
+    # Skip the trailing NO-DATA micro-batch: recentProgress showed a
+    # 5th batch with rows_in=0 whose only work is state eviction
+    # (0.9-2s of 32 state-store commits at sf0.1).  For an INNER join
+    # in append mode every output row is emitted in the data batch that
+    # completes the match, and eviction is still exercised across data
+    # batches 1-3, so the finalized result is byte-identical (1455 rows
+    # at sf0.1 in both configs).  An OUTER stream-stream join (or any
+    # watermark-completed emission) must keep no-data batches on.  The
+    # conf is set in a session of the replay's own that carries the
+    # caller's runtime confs, so the caller's session never reads it
+    # flipped; a started query keeps the conf it was started with.
+    own = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            own.conf.set(k, v)
+    own.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    stream = _replay_ordered_events(own, sf_dir, "ssjoin")
     p = (stream.filter(F.col("event_type") == "purchase")
          .select(F.col("event_id").alias("p_id"), "user_id",
                  F.col("ts").alias("p_ts"))
@@ -594,28 +610,10 @@ def q_stream_stream_join_replay(spark, sf_dir):
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("gap_us"))
     _MEM_SINK_SEQ[0] += 1
     name = f"sgraft_ssjoin_replay_{_MEM_SINK_SEQ[0]}"
-    # Skip the trailing NO-DATA micro-batch (r12, guide §1/§7 measured:
-    # recentProgress showed a 5th batch with rows_in=0 whose only work
-    # is state eviction — 0.9-2s of 32 state-store commits).  For an
-    # INNER join in append mode every output row is emitted in the data
-    # batch that completes the match, and watermark eviction is still
-    # exercised across data batches 1-3 (numRowsTotal holds ~10.5k
-    # while ~10k rows/batch insert), so the finalized result is
-    # byte-identical (1455 rows at sf0.1 in both configs); the query
-    # terminates right after the drain, so the skipped eviction freed
-    # no memory anyone uses.  Scoped to this query and restored — an
-    # OUTER stream-stream join (or any watermark-completed emission)
-    # must keep no-data batches on.
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        _await_drained(q, "stream_stream_join")
-    finally:
-        spark.conf.set(key, prev)
-    return spark.sql(f"SELECT * FROM {name}")
+    q = (out.writeStream.format("memory").queryName(name)
+         .outputMode("append").trigger(availableNow=True).start())
+    _await_drained(q, "stream_stream_join")
+    return own.sql(f"SELECT * FROM {name}")
 
 
 def q_stream_psi_drift_replay(spark, sf_dir):

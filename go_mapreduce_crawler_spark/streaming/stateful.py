@@ -13,10 +13,27 @@ and unbounded.
 streaming's version of dedup.q_dedup_exact: state holds one entry per
 key seen inside the watermark horizon, so memory is bounded by key
 arrival rate x watermark, not stream length.
+
+The ``foreachBatch`` state family (stream_mv_refresh, stream_cell_counts,
+stream_gdpr_forget, stream_ivf_index, stream_bloom_build,
+stream_cdc_merge, stream_inverted_index, stream_decayed_engagement,
+stream_quantile_sketch and the two windowed dedups) keeps its state as
+files under ONE versioned-snapshot protocol, ``_versioned_snapshots``:
+micro-batch ``b`` reads the newest committed snapshot ``state_v<p>``
+with ``p < b``, computes its own ``state_v<b>`` from it, overwrites
+that directory, and then prunes every version older than ``p``.  The
+idempotence contract follows: a retried batch keeps its batch_id, so
+it overwrites its own version and merges from the same predecessor —
+never from itself — and the state is exactly-once without any sink
+transaction.  Each operator supplies only its per-batch step; the
+monoid merges are a union with the predecessor followed by the same
+GROUP BY as the batch twin (``_fold``), so a NULL key folds into one
+row exactly as it does in batch SQL.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
@@ -229,6 +246,72 @@ def stream_enrich_static(events: DataFrame, dim: DataFrame) -> DataFrame:
                     "c_mktsegment", "c_nationkey"))
 
 
+def _state_versions(fs_dir: str) -> list[int]:
+    """Sorted committed snapshot versions under ``fs_dir`` —
+    tolerates stray non-integer ``state_v*`` suffixes (temp dirs),
+    unlike a bare int() parse."""
+    import glob as _glob
+    out = []
+    for p in _glob.glob(f"{fs_dir}/state_v*"):
+        try:
+            out.append(int(p.rsplit("state_v", 1)[1]))
+        except ValueError:
+            pass
+    return sorted(out)
+
+
+def _versioned_snapshots(stream: DataFrame, state_dir: str,
+                         checkpoint: str, step, read=None):
+    """Start ``stream`` under the versioned-snapshot protocol (module
+    docstring) with ``step`` as the per-batch work.
+
+    Per micro-batch: look up the committed versions, call
+    ``step(batch_df, batch_id, prev)`` with ``prev = read(p)`` for the
+    newest version ``p < batch_id`` (None on the first batch; the
+    default ``read`` loads the parquet table ``state_v<p>``), overwrite
+    ``state_v<batch_id>`` with the DataFrame the step returns, then
+    prune every version older than ``p``.  A step that lays out its
+    own snapshot directory (the windowed dedups: postings + meta)
+    writes it and returns None.
+
+    The version lookup is the batch's first statement and goes through
+    the module-level ``_state_versions`` — the hook
+    tests/test_streaming_restart.py injects its kills into."""
+    import shutil
+
+    spark = stream.sparkSession
+    if read is None:
+        def read(v):
+            return spark.read.parquet(f"{state_dir}/state_v{v}")
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        prevs = [v for v in _state_versions(state_dir) if v < batch_id]
+        snap = step(batch_df, batch_id, read(prevs[-1]) if prevs else None)
+        if snap is not None:
+            snap.write.mode("overwrite").parquet(
+                f"{state_dir}/state_v{batch_id}")
+        for v in prevs[:-1]:
+            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+
+    return (stream.writeStream.foreachBatch(run)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True).start())
+
+
+def _fold(prev, partial: DataFrame, keys: list, *aggs) -> DataFrame:
+    """Monoid merge of the predecessor snapshot with a batch partial:
+    union, then the partial's own GROUP BY ``keys`` with the merge
+    aggregates — every key, NULL included, leaves exactly one row."""
+    if prev is None:
+        return partial
+    return prev.unionByName(partial).groupBy(*keys).agg(*aggs)
+
+
+def _sums(*cols: str) -> list:
+    """Additive merge aggregates (a NULL partial sum counts as 0)."""
+    return [F.sum(F.coalesce(c, F.lit(0))).alias(c) for c in cols]
+
+
 def stream_mv_refresh(events: DataFrame, state_dir: str, checkpoint: str):
     """Continuously-maintained materialized view via ``foreachBatch``
     MERGE — the streaming face of maintenance.q_mv_incremental_refresh
@@ -237,13 +320,12 @@ def stream_mv_refresh(events: DataFrame, state_dir: str, checkpoint: str):
     IS A TABLE, merged monoid-style once per micro-batch.
 
     Per batch: partial-aggregate the batch (count + exact INTEGER-CENTS
-    sum per event_type — map-side combine applies within the batch),
-    read the previous snapshot, full-outer monoid merge, and write
-    snapshot ``state_v<batchId>``.  Versioned snapshots make retries
-    IDEMPOTENT (a replayed batch overwrites its own version and merges
-    from the same predecessor), which is exactly-once for the view
-    without any sink transaction support.  Old versions are pruned
-    after commit.
+    sum per event_type — map-side combine applies within the batch)
+    and fold it into the previous snapshot (union + group-by) as
+    snapshot ``state_v<batchId>`` — the versioned-snapshot protocol,
+    so retries are IDEMPOTENT (a replayed batch overwrites its own
+    version and merges from the same predecessor), which is
+    exactly-once for the view without any sink transaction support.
 
     Arithmetic is engine-portable BY CONSTRUCTION: each value is
     quantized to integer cents via ``FLOOR(value * 100 + 0.5)`` —
@@ -255,84 +337,39 @@ def stream_mv_refresh(events: DataFrame, state_dir: str, checkpoint: str):
     doctrine.)
 
     Scale: the per-batch work shuffles |keys-in-batch| partial rows;
-    the merge join is |view| x |batch-keys| keyed by the view key —
-    both bounded by key cardinality, never by stream length.
+    the merge shuffles |view| + |batch-keys| rows keyed by the view
+    key — both bounded by key cardinality, never by stream length.
     """
-    spark = events.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         partial = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.expr(
                 "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)")).alias("s"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("event_type").alias("k"),
-                            F.col("n").alias("n1"), F.col("s").alias("s1"))
-            d = partial.select(F.col("event_type").alias("k"),
-                               F.col("n").alias("n2"), F.col("s").alias("s2"))
-            z = F.lit(0).cast("bigint")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("event_type"),
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0))).alias("n"),
-                              (F.coalesce("s1", z) + F.coalesce("s2", z))
-                              .cast("bigint").alias("s")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _fold(prev, partial, ["event_type"], *_sums("n", "s"))
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(events, state_dir, checkpoint, step)
 
 
 def stream_cell_counts(cells: DataFrame, state_dir: str,
                        checkpoint: str):
     """foreachBatch-maintained CELL-COUNT state over an arbitrary
     2-part key (``k1``, ``k2``) — the pure count monoid (commutative,
-    associative; the versioned-snapshot protocol of stream_mv_refresh
-    makes batch retries idempotent, so the maintained counts are
-    exactly-once).  Used by the streaming PSI monitor
-    (streaming_replay.q_stream_psi_drift_replay): cells = (event_type,
-    bucket) and the finalized state is the current-window histogram.
+    associative; the versioned-snapshot protocol makes batch retries
+    idempotent, so the maintained counts are exactly-once).  Used by
+    the streaming PSI monitor (streaming_replay.q_stream_psi_drift_replay):
+    cells = (event_type, bucket) and the finalized state is the
+    current-window histogram.
 
     Scale: per batch shuffles |cells-in-batch| partial rows; the merge
-    is |state| x |batch-cells| keyed equi-join — bounded by cell
+    is |state| + |batch-cells| rows keyed by cell — bounded by cell
     cardinality, never stream length.
     """
-    spark = cells.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         partial = batch_df.groupBy("k1", "k2").agg(
             F.count(F.lit(1)).alias("n"))
-        prevs = [v for v in _state_versions(state_dir) if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select("k1", "k2", F.col("n").alias("n1"))
-            d = partial.select("k1", "k2", F.col("n").alias("n2"))
-            merged = (p.join(d, ["k1", "k2"], "full_outer")
-                      .select("k1", "k2",
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0))).alias("n")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _fold(prev, partial, ["k1", "k2"], *_sums("n"))
 
-    return (cells.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(cells, state_dir, checkpoint, step)
 
 
 def read_mv_state(spark, state_dir: str) -> DataFrame:
@@ -362,32 +399,16 @@ def stream_gdpr_forget(requests: DataFrame, orders: DataFrame,
     orders table (one partial+final agg); every later batch's work is
     |view| x |batch keys| — the view never re-derives from raw orders.
     """
-    spark = requests.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-        else:
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
+        if prev is None:
             prev = orders.groupBy("o_custkey").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
                  .alias("s"))
         keys = batch_df.select("fk").distinct()
-        merged = prev.join(keys, prev["o_custkey"] == keys["fk"],
-                           "left_anti")
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return prev.join(keys, prev["o_custkey"] == keys["fk"], "left_anti")
 
-    return (requests.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(requests, state_dir, checkpoint, step)
 
 
 def stream_ivf_index(vecs: DataFrame, index_of, state_dir: str,
@@ -403,46 +424,13 @@ def stream_ivf_index(vecs: DataFrame, index_of, state_dir: str,
     """
     from ..sources.tables import spread
 
-    spark = vecs.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         # spread: the 1-file micro-batch's 16-centroid dot-fold
         # assignment ran in one task (guide §2.5; span-merge lesson)
         partial = index_of(spread(batch_df))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("cell").alias("k"),
-                            F.col("n").alias("n1"),
-                            F.col("l1").alias("a1"),
-                            F.col("l2").alias("a2"))
-            d = partial.select(F.col("cell").alias("k"),
-                               F.col("n").alias("n2"),
-                               F.col("l1").alias("b1"),
-                               F.col("l2").alias("b2"))
-            z = F.lit(0).cast("long")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("cell"),
-                              (F.coalesce("n1", z)
-                               + F.coalesce("n2", z)).alias("n"),
-                              (F.coalesce("a1", z)
-                               + F.coalesce("b1", z)).alias("l1"),
-                              (F.coalesce("a2", z)
-                               + F.coalesce("b2", z)).alias("l2")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return _fold(prev, partial, ["cell"], *_sums("n", "l1", "l2"))
 
-    return (vecs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(vecs, state_dir, checkpoint, step)
 
 
 def stream_bloom_build(docs: DataFrame, bloom_of, state_dir: str,
@@ -462,39 +450,14 @@ def stream_bloom_build(docs: DataFrame, bloom_of, state_dir: str,
     """
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         # spread: the 1-file micro-batch's gram+md5-probe pass ran in
         # one task (guide §2.5; span-merge lesson)
         partial = bloom_of(spread(batch_df.select("doc_id", "text")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("slot").alias("k"),
-                            F.col("word").alias("w1"))
-            d = partial.select(F.col("slot").alias("k"),
-                               F.col("word").alias("w2"))
-            z = F.lit(0).cast("long")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("slot"),
-                              F.coalesce("w1", z)
-                              .bitwiseOR(F.coalesce("w2", z))
-                              .alias("word")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return _fold(prev, partial, ["slot"],
+                     F.bit_or("word").alias("word"))
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(docs, state_dir, checkpoint, step)
 
 
 def stream_cdc_merge(changes: DataFrame, state_dir: str,
@@ -512,31 +475,13 @@ def stream_cdc_merge(changes: DataFrame, state_dir: str,
     changelog length; the base-table merge happens once at finalize,
     not per batch.
     """
-    spark = changes.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         partial = (batch_df.groupBy("k")
                    .agg(F.max(F.struct("seq", "op", "price", "status"))
                          .alias("w")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            merged = (prev.select("k", "w").unionByName(partial)
-                      .groupBy("k").agg(F.max("w").alias("w")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
+        return _fold(prev, partial, ["k"], F.max("w").alias("w"))
 
-    return (changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(changes, state_dir, checkpoint, step)
 
 
 def stream_inverted_index(docs: DataFrame, state_dir: str,
@@ -546,65 +491,41 @@ def stream_inverted_index(docs: DataFrame, state_dir: str,
     search stack keeps BOTH indexes fresh as documents arrive): each
     micro-batch is indexed (term 3-gram -> sorted (doc_id, tf)
     postings, exactly maintenance.q_inverted_index_delta's algebra)
-    and merged into the versioned snapshot by a term-keyed full-outer
-    array concat+sort — doc batches are disjoint, so merged == rebuilt
+    and folded into the versioned snapshot by a per-term posting
+    concat+sort — doc batches are disjoint, so merged == rebuilt
     bit-for-bit and the batch twin's direct-index oracle is an
     exactly-once value proof.
 
     Scale: the state is THE INDEX (what a search cluster actually
     maintains) — bounded by index size, never stream length; per-batch
-    merge cost is O(|batch index|) through the term-keyed join, and
+    merge cost is one term-keyed shuffle of the snapshot plus the
+    batch index, and
     postings ride as arrays (positional delta encoding at 100 TB — the
     batch twin's note — changes storage, not this merge algebra).
     """
     from ..operators.text import _token_ngrams
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
-    empty = F.array().cast("array<struct<doc_id:bigint,tf:bigint>>")
-
-    def index(batch):
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         # spread: a 1-file micro-batch is one scan partition — the
         # 3-gram build ran serially (guide §2.5).  explode_outer +
         # null-filter keeps the inferred non-empty filter from
         # re-evaluating the zip_with gram chain below the exchange
         # (the span-merge lesson); grams are never null, so rows are
         # identical to the inner explode.
-        g = (spread(batch.select("doc_id", "text"))
+        g = (spread(batch_df.select("doc_id", "text"))
              .select("doc_id", F.explode_outer(
                  _token_ngrams(F.split("text", " "), 3)).alias("t"))
              .filter(F.col("t").isNotNull()))
-        return (g.groupBy("t", "doc_id")
-                 .agg(F.count(F.lit(1)).alias("tf"))
-                 .groupBy("t")
-                 .agg(F.array_sort(F.collect_list(
-                     F.struct("doc_id", "tf"))).alias("post")))
+        partial = (g.groupBy("t", "doc_id")
+                    .agg(F.count(F.lit(1)).alias("tf"))
+                    .groupBy("t")
+                    .agg(F.array_sort(F.collect_list(
+                        F.struct("doc_id", "tf"))).alias("post")))
+        return _fold(prev, partial, ["t"], F.array_sort(F.flatten(
+            F.collect_list("post"))).alias("post"))
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        partial = index(batch_df)
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            merged = (prev.withColumnRenamed("post", "pa")
-                      .join(partial.withColumnRenamed("post", "pb"),
-                            "t", "full_outer")
-                      .select("t", F.array_sort(F.concat(
-                          F.coalesce("pa", empty),
-                          F.coalesce("pb", empty))).alias("post")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}",
-                          ignore_errors=True)
-
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(docs, state_dir, checkpoint, step)
 
 
 def inverted_index_finalize(index: DataFrame) -> DataFrame:
@@ -670,17 +591,15 @@ def stream_decayed_engagement(events: DataFrame, ref_day: int,
     agree bit-for-bit (pinned in tests/test_streaming.py).
 
     Scale: per batch the work is one |users-in-batch| partial agg; the
-    merge join is |view| x |batch-users| keyed by user — bounded by
-    key cardinality, never stream length.
+    merge shuffles |view| + |batch-users| rows keyed by user — bounded
+    by key cardinality, never stream length.
     """
     from ..operators.behavior import _DECAY_W
 
     spark = events.sparkSession
     wdf = spark.createDataFrame(list(_DECAY_W), "age_d int, w_e12 long")
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         terms = (batch_df
                  .select("user_id", ts_day().alias("day"),
                          (F.col("value").cast("decimal(12,2)") * 100)
@@ -693,34 +612,9 @@ def stream_decayed_engagement(events: DataFrame, ref_day: int,
             F.sum(F.col("cents").cast("decimal(38,0)")
                   * F.coalesce("w_e12", F.lit(0))).alias("s"),
             F.count(F.lit(1)).alias("n_events"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select(F.col("user_id").alias("k"),
-                            F.col("s").alias("s1"),
-                            F.col("n_events").alias("n1"))
-            d = partial.select(F.col("user_id").alias("k"),
-                               F.col("s").alias("s2"),
-                               F.col("n_events").alias("n2"))
-            z = F.lit(0).cast("decimal(38,0)")
-            merged = (p.join(d, "k", "full_outer")
-                      .select(F.col("k").alias("user_id"),
-                              (F.coalesce("s1", z) + F.coalesce("s2", z))
-                              .cast("decimal(38,0)").alias("s"),
-                              (F.coalesce("n1", F.lit(0))
-                               + F.coalesce("n2", F.lit(0)))
-                              .alias("n_events")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _fold(prev, partial, ["user_id"], *_sums("s", "n_events"))
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(events, state_dir, checkpoint, step)
 
 
 def decayed_engagement_finalize(state_df: DataFrame) -> DataFrame:
@@ -744,16 +638,12 @@ def stream_quantile_sketch(events: DataFrame, state_dir: str,
     entire point of a mergeable sketch at an unbounded input.
 
     Scale: per-batch work is bounded by |types| x ~700 bins regardless
-    of batch size (map-side combine absorbs rows); the merge join is
+    of batch size (map-side combine absorbs rows); the merge is
     sketch-sized.  Versioned snapshots keep retries exactly-once.
     """
     from ..operators.scale import _QSK_BIN
 
-    spark = events.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def step(batch_df: DataFrame, _batch_id: int, prev) -> DataFrame:
         cents = (F.col("value").cast("decimal(12,2)") * 100).cast("long")
         partial = (batch_df
                    .select("event_type", cents.alias("c"))
@@ -761,28 +651,9 @@ def stream_quantile_sketch(events: DataFrame, state_dir: str,
                                _QSK_BIN.format(div="DIV") + " AS b")
                    .groupBy("event_type", "b")
                    .agg(F.count(F.lit(1)).alias("cnt")))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            prev = spark.read.parquet(f"{state_dir}/state_v{prevs[-1]}")
-            p = prev.select("event_type", "b", F.col("cnt").alias("c1"))
-            d = partial.select("event_type", "b",
-                               F.col("cnt").alias("c2"))
-            merged = (p.join(d, ["event_type", "b"], "full_outer")
-                      .select("event_type", "b",
-                              (F.coalesce("c1", F.lit(0))
-                               + F.coalesce("c2", F.lit(0)))
-                              .alias("cnt")))
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}")
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return _fold(prev, partial, ["event_type", "b"], *_sums("cnt"))
 
-    return (events.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _versioned_snapshots(events, state_dir, checkpoint, step)
 
 
 def quantile_sketch_finalize(state_df: DataFrame) -> DataFrame:
@@ -809,20 +680,6 @@ def quantile_sketch_finalize(state_df: DataFrame) -> DataFrame:
 
 
 SPAN_WIN_DOCS = 200   # trailing-window width (docs) for streaming span dedup
-
-
-def _state_versions(fs_dir: str) -> list[int]:
-    """Sorted committed snapshot versions under ``fs_dir`` —
-    tolerates stray non-integer ``state_v*`` suffixes (temp dirs),
-    unlike a bare int() parse."""
-    import glob as _glob
-    out = []
-    for p in _glob.glob(f"{fs_dir}/state_v*"):
-        try:
-            out.append(int(p.rsplit("state_v", 1)[1]))
-        except ValueError:
-            pass
-    return sorted(out)
 
 
 def _write_meta(state_dir: str, batch_id: int, mx) -> None:
@@ -866,7 +723,7 @@ def _read_meta(state_dir: str, version: int):
 
 def _parquet_col_max(directory: str, col: str):
     """Exact max of an int64 column from parquet FOOTER statistics —
-    no Spark job.  The windowed-dedup merges just WROTE the batch's
+    no Spark job.  The windowed-dedup tail just WROTE the batch's
     verdict relation (one row per batch doc), so its doc_id max IS the
     batch max; reading it back from the row-group stats replaces one
     whole-batch aggregation job per micro-batch.  Returns None when
@@ -898,6 +755,56 @@ def _parquet_col_max(directory: str, col: str):
                 return None
             mx = st.max if mx is None else max(mx, st.max)
     return mx
+
+
+def _cache(cached: ExitStack, df: DataFrame) -> DataFrame:
+    """``df.cache()``, unpersisted when the ``cached`` scope closes —
+    on success and when the batch raises alike."""
+    cached.callback(df.unpersist)
+    return df.cache()
+
+
+def _windowed_dedup(docs: DataFrame, state_dir: str, checkpoint: str,
+                    postings_schema: str, probe):
+    """The two windowed dedups' shared per-batch tail on the
+    versioned-snapshot protocol.
+
+    ``probe(batch_df, post0, cached)`` judges the batch against the
+    trailing-window postings ``post0`` (an empty ``postings_schema``
+    relation on the first batch) and returns ``(verdicts, hist)``: the
+    batch's per-doc verdicts and ``post0`` plus the batch's own
+    postings.  What it caches goes through ``_cache(cached, ...)``.
+    The tail then writes the verdicts to the batch's own
+    ``verdicts_b<batch>``, takes the batch max doc_id from that
+    write's parquet footers (a Spark aggregate only when the stats are
+    absent), writes the running max to the ``meta`` sidecar, and
+    writes ``hist`` pruned to doc_id > max - SPAN_WIN_DOCS to
+    ``state_v<batch>/postings``."""
+    spark = docs.sparkSession
+
+    def read(v):
+        return (spark.read.parquet(f"{state_dir}/state_v{v}/postings"),
+                _read_meta(state_dir, v))
+
+    def step(batch_df: DataFrame, batch_id: int, prev) -> None:
+        post0, prev_mx = prev or (
+            spark.createDataFrame([], postings_schema), None)
+        with ExitStack() as cached:
+            verdicts, hist = probe(batch_df, post0, cached)
+            verdict_dir = f"{state_dir}/verdicts_b{batch_id}"
+            verdicts.write.mode("overwrite").parquet(verdict_dir)
+            bmx = _parquet_col_max(verdict_dir, "doc_id")
+            if bmx is None:
+                bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
+            mx = max((x for x in (prev_mx, bmx) if x is not None),
+                     default=None)
+            _write_meta(state_dir, batch_id, mx)
+            kept = (hist if mx is None else
+                    hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS))
+            kept.write.mode("overwrite").parquet(
+                f"{state_dir}/state_v{batch_id}/postings")
+
+    return _versioned_snapshots(docs, state_dir, checkpoint, step, read)
 
 
 def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
@@ -942,11 +849,7 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
     from ..operators.dedup import SPAN_N
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def probe(batch_df: DataFrame, post0: DataFrame, cached: ExitStack):
         # A maxFilesPerTrigger=1 micro-batch is ONE scan partition, so
         # the interpreted md5 gram explode ran in a single task (guide
         # §2.5 input skew: measured 2 x ~1.3s one-task jobs per batch —
@@ -971,32 +874,23 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
         # md5 HOF runs twice per batch (measured ~30% of batch wall
         # at the sf1 probe); eagerly filled (count) so the consumers'
         # concurrently-materialized AQE stages cannot race the fill
-        # and each recompute the explode; unpersisted before return.
+        # and each recompute the explode.
         # explode_OUTER + null-filter, not explode: the inner form's
         # inferred non-empty filter (size(grams)>0) pushes below the
         # spread exchange and re-evaluates the whole md5 transform in
         # the serial scan task (measured 1.10s -> 0.17s noop; rows
         # identical — gm is never null, so the filter only drops the
         # outer form's empty-doc null row exactly like inner explode).
-        occ = (g.select("doc_id", F.explode_outer("grams").alias("gm"))
-                .filter(F.col("gm").isNotNull())
-                .cache())
+        occ = _cache(cached, g.select(
+            "doc_id", F.explode_outer("grams").alias("gm"))
+            .filter(F.col("gm").isNotNull()))
         occ.count()
         base = g.select("doc_id",
                         F.size("grams").cast("long").alias("n_grams"))
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            post0 = spark.read.parquet(
-                f"{state_dir}/state_v{prevs[-1]}/postings")
-            prev_mx = _read_meta(state_dir, prevs[-1])
-        else:
-            post0 = spark.createDataFrame([], "doc_id long, gm string")
-            prev_mx = None
         # hist feeds BOTH the duplicate probe (this job) and the pruned
         # postings write (the next job) — cache it so the batch's
         # distinct shuffle runs once per batch, not once per consumer
-        hist = post0.unionByName(occ.distinct()).cache()
+        hist = _cache(cached, post0.unionByName(occ.distinct()))
         o, h = occ.alias("o"), hist.alias("h")
         dup = (o.join(h, (F.col("o.gm") == F.col("h.gm"))
                       & (F.col("h.doc_id") < F.col("o.doc_id"))
@@ -1005,34 +899,14 @@ def stream_windowed_span_dedup(docs: DataFrame, state_dir: str,
                       "left_semi")
                 .groupBy("doc_id")
                 .agg(F.count(F.lit(1)).alias("n_dup_grams")))
-        verd_new = (base.join(dup, "doc_id", "left")
+        verdicts = (base.join(dup, "doc_id", "left")
                         .select("doc_id", "n_grams",
                                 F.coalesce("n_dup_grams", F.lit(0))
                                  .cast("long").alias("n_dup_grams")))
-        verd_new.write.mode("overwrite").parquet(
-            f"{state_dir}/verdicts_b{batch_id}")
-        # batch max from the verdict footers just written (one row per
-        # batch doc) — replaces a whole-batch aggregation job; falls
-        # back to the Spark agg only if footer stats are absent
-        bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}",
-                               "doc_id")
-        if bmx is None:
-            bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-        mx = max(x for x in (prev_mx, bmx) if x is not None) \
-            if (prev_mx is not None or bmx is not None) else None
-        _write_meta(state_dir, batch_id, mx)
-        kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
-                if mx is not None else hist)
-        kept.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}/postings")
-        occ.unpersist()
-        hist.unpersist()
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return verdicts, hist
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _windowed_dedup(docs, state_dir, checkpoint,
+                           "doc_id long, gm string", probe)
 
 
 def _read_verdict_log(spark, state_dir: str) -> DataFrame:
@@ -1087,11 +961,7 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
     from ..operators.dedup import _band_buckets_of
     from ..sources.tables import spread
 
-    spark = docs.sparkSession
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
+    def probe(batch_df: DataFrame, post0: DataFrame, cached: ExitStack):
         # batch-scoped cache: the signature build feeds the probe,
         # the history union, AND the postings write — one md5 pass
         # per batch instead of three; EAGER fill (count) so the
@@ -1099,19 +969,9 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
         # the unfilled cache; spread() first because a 1-file
         # micro-batch is one scan partition and the Carter-Wegman
         # signature pass ran serially (guide §2.5; span-merge lesson).
-        bands = _band_buckets_of(
-            spread(batch_df.select("doc_id", "text"))).cache()
+        bands = _cache(cached, _band_buckets_of(
+            spread(batch_df.select("doc_id", "text"))))
         bands.count()
-        prevs = [v for v in _state_versions(state_dir)
-                 if v < batch_id]
-        if prevs:
-            post0 = spark.read.parquet(
-                f"{state_dir}/state_v{prevs[-1]}/postings")
-            prev_mx = _read_meta(state_dir, prevs[-1])
-        else:
-            post0 = spark.createDataFrame(
-                [], "doc_id long, band int, bucket string")
-            prev_mx = None
         hist = post0.unionByName(bands)
         o, h = bands.alias("o"), hist.alias("h")
         hits = (o.join(h, (F.col("o.band") == F.col("h.band"))
@@ -1122,7 +982,7 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
                        "left_semi")
                  .groupBy("doc_id")
                  .agg(F.countDistinct("band").alias("n_hit_bands")))
-        verd_new = (batch_df.select("doc_id")
+        verdicts = (batch_df.select("doc_id")
                     .join(hits, "doc_id", "left")
                     .select("doc_id",
                             F.when(F.col("n_hit_bands").isNotNull(),
@@ -1130,27 +990,10 @@ def stream_windowed_minhash_dedup(docs: DataFrame, state_dir: str,
                              .cast("int").alias("is_near_dup_candidate"),
                             F.coalesce("n_hit_bands", F.lit(0))
                              .cast("long").alias("n_hit_bands")))
-        verd_new.write.mode("overwrite").parquet(
-            f"{state_dir}/verdicts_b{batch_id}")
-        # batch max from the verdict footers (see the span merge)
-        bmx = _parquet_col_max(f"{state_dir}/verdicts_b{batch_id}",
-                               "doc_id")
-        if bmx is None:
-            bmx = batch_df.agg(F.max("doc_id")).collect()[0][0]
-        mx = max(x for x in (prev_mx, bmx) if x is not None) \
-            if (prev_mx is not None or bmx is not None) else None
-        _write_meta(state_dir, batch_id, mx)
-        kept = (hist.filter(F.col("doc_id") > mx - SPAN_WIN_DOCS)
-                if mx is not None else hist)
-        kept.write.mode("overwrite").parquet(
-            f"{state_dir}/state_v{batch_id}/postings")
-        bands.unpersist()
-        for v in prevs[:-1]:
-            shutil.rmtree(f"{state_dir}/state_v{v}", ignore_errors=True)
+        return verdicts, hist
 
-    return (docs.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())
+    return _windowed_dedup(docs, state_dir, checkpoint,
+                           "doc_id long, band int, bucket string", probe)
 
 
 def windowed_minhash_dedup_finalize(spark, state_dir: str) -> DataFrame:

@@ -664,15 +664,28 @@ def test_stream_quantile_sketch_matches_batch_rollup(
 
 
 def test_mv_refresh_versioned_snapshots_are_retry_idempotent(
-        spark, event_stream_dir, tmp_path):
+        spark, event_stream_dir, tmp_path, monkeypatch):
     """The exactly-once claim of the foreachBatch monoid-state family,
     pinned directly: re-running a micro-batch's merge with the SAME
     batch_id (what a Structured Streaming retry does after a failure
     between sink write and checkpoint commit) must leave the final
     view bit-identical — the replayed batch overwrites its own version
     and merges from the same predecessor, never double-counting."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
     from go_mapreduce_crawler_spark.streaming.stateful import (
         read_mv_state, stream_mv_refresh)
+
+    # keep the operator's own per-batch callback so the retry below
+    # runs exactly the code the stream ran
+    callbacks = []
+    orig = DataStreamWriter.foreachBatch
+
+    def spy(self, func):
+        callbacks.append(func)
+        return orig(self, func)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", spy)
 
     batch_events = spark.read.parquet(event_stream_dir)
     stream_events = (spark.readStream.option("maxFilesPerTrigger", "1")
@@ -683,47 +696,22 @@ def test_mv_refresh_versioned_snapshots_are_retry_idempotent(
     q = stream_mv_refresh(stream_events, state, ckpt)
     q.awaitTermination(180)
     before = {tuple(r) for r in read_mv_state(spark, state).collect()}
+    assert len(callbacks) == 1
 
-    # simulate a retry of the LAST batch: re-run the merge body with
-    # the same batch_id over the same rows (one of the 4 splits)
+    # simulate a retry of the LAST batch: re-run the callback with the
+    # same batch_id over the same rows (one of the 4 splits), read from
+    # the checkpoint's file-source log (ckpt/sources/0/<batchId>
+    # records exactly which files that micro-batch consumed); it must
+    # OVERWRITE its version, not accumulate.
     import glob as _glob
-    versions = sorted(int(p.rsplit("state_v", 1)[1])
-                      for p in _glob.glob(f"{state}/state_v*"))
-    last = versions[-1]
-    from pyspark.sql import functions as F
-    prevs = [v for v in versions if v < last]
-    prev = spark.read.parquet(f"{state}/state_v{prevs[-1]}") if prevs \
-        else None
-    # the operator's merge recomputes partial(batch) + prev; replaying
-    # with the same id must OVERWRITE, not accumulate.  We emulate the
-    # exact merge body on the true last-batch rows, read from the
-    # checkpoint's file-source log (ckpt/sources/0/<batchId> records
-    # exactly which files that micro-batch consumed):
     import json as _json
+    last = max(int(p.rsplit("state_v", 1)[1])
+               for p in _glob.glob(f"{state}/state_v*"))
     with open(f"{ckpt}/sources/0/{last}") as fh:
         entries = [_json.loads(line) for line in fh
                    if line.startswith("{")]
-    last_files = [e["path"] for e in entries]
-    last_batch = spark.read.parquet(*last_files)
-    partial = last_batch.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"))
-        .alias("s"))
-    if prev is not None:
-        p = prev.select(F.col("event_type").alias("k"),
-                        F.col("n").alias("n1"), F.col("s").alias("s1"))
-        d = partial.select(F.col("event_type").alias("k"),
-                           F.col("n").alias("n2"), F.col("s").alias("s2"))
-        z = F.lit(0).cast("bigint")
-        merged = (p.join(d, "k", "full_outer")
-                  .select(F.col("k").alias("event_type"),
-                          (F.coalesce("n1", F.lit(0))
-                           + F.coalesce("n2", F.lit(0))).alias("n"),
-                          (F.coalesce("s1", z) + F.coalesce("s2", z))
-                          .cast("bigint").alias("s")))
-    else:
-        merged = partial
-    merged.write.mode("overwrite").parquet(f"{state}/state_v{last}")
+    last_batch = spark.read.parquet(*[e["path"] for e in entries])
+    callbacks[0](last_batch, last)
     after = {tuple(r) for r in read_mv_state(spark, state).collect()}
     assert after == before and len(after) > 0
 
@@ -955,3 +943,127 @@ def test_decontam_bloom_replay_matches_batch_twin(spark):
     batch_bloom = {(r.slot, r.word) for r in bloom_partial(
         d.filter(F.col("doc_id") % EVAL_MOD == 0)).collect()}
     assert streamed == batch_bloom and len(batch_bloom) > 100
+
+
+def _null_key_event_dir(spark, root):
+    """Three one-file micro-batches of events; each file holds one
+    NULL event_type row and one NULL user_id row next to keyed rows
+    (same value in every batch, so the NULL key lands in one sketch
+    bin)."""
+    import datetime as dt
+
+    in_dir = f"{root}/in"
+    for i in range(3):
+        ts = dt.datetime(2024, 1, 1 + i, 12)
+        (spark.createDataFrame(
+            [(10 * i + 1, 1, "view", ts, 1.25),
+             (10 * i + 2, 2, "purchase", ts, 10.5 + i),
+             (10 * i + 3, 3, None, ts, 2.0),
+             (10 * i + 4, None, "view", ts, 2.0)],
+            "event_id long, user_id long, event_type string, "
+            "ts timestamp, value double")
+         .coalesce(1).write.mode("append").parquet(in_dir))
+    return in_dir
+
+
+@pytest.mark.parametrize("name", ["mv_refresh", "quantile_sketch",
+                                  "decayed_engagement"])
+def test_foreachbatch_state_folds_null_key_like_batch_group_by(
+        spark, tmp_path, name):
+    """A NULL key in several micro-batches must fold into ONE state
+    row, exactly as the batch GROUP BY does — the same state a single
+    micro-batch over all rows produces (no merge at all)."""
+    from go_mapreduce_crawler_spark.streaming import (
+        read_mv_state, stream_decayed_engagement, stream_mv_refresh,
+        stream_quantile_sketch)
+
+    start, key, count = {
+        "mv_refresh": (stream_mv_refresh, "event_type", "n"),
+        "quantile_sketch": (stream_quantile_sketch, "event_type", "cnt"),
+        "decayed_engagement": (
+            lambda s, st, ck: stream_decayed_engagement(s, 19725, st, ck),
+            "user_id", "n_events"),
+    }[name]
+    in_dir = _null_key_event_dir(spark, str(tmp_path))
+    schema = spark.read.parquet(in_dir).schema
+
+    def finalized(tag, per_trigger):
+        reader = spark.readStream.schema(schema)
+        if per_trigger:
+            reader = reader.option("maxFilesPerTrigger", "1")
+        state = str(tmp_path / f"{tag}_state")
+        q = start(reader.parquet(in_dir), state, str(tmp_path / f"{tag}_ck"))
+        assert q.awaitTermination(180) and q.exception() is None
+        return sorted(map(tuple, read_mv_state(spark, state).collect()),
+                      key=repr)
+
+    streamed = finalized("three_batches", True)
+    batch = finalized("one_batch", False)
+    assert streamed == batch
+    null_rows = [r for r in read_mv_state(
+        spark, str(tmp_path / "three_batches_state")).collect()
+        if r[key] is None]
+    assert len(null_rows) == 1 and null_rows[0][count] == 3
+
+
+@pytest.mark.parametrize("name", ["span", "minhash"])
+def test_windowed_dedup_failed_batch_releases_its_cache(
+        spark, sf_small, monkeypatch, name):
+    """A windowed-dedup batch that raises after filling its batch-scoped
+    caches must still unpersist them: no new persistent RDD may
+    outlive the failed query."""
+    from go_mapreduce_crawler_spark.operators.streaming_replay import (
+        _replay_ordered_docs)
+    from go_mapreduce_crawler_spark.streaming import stateful as st
+
+    start = {"span": st.stream_windowed_span_dedup,
+             "minhash": st.stream_windowed_minhash_dedup}[name]
+    stream, state, ckpt = _replay_ordered_docs(
+        spark, sf_small, f"leak_{name}")
+    calls = []
+    write_meta = st._write_meta
+
+    def failing(state_dir, batch_id, mx):
+        calls.append(batch_id)
+        if len(calls) == 2:
+            raise RuntimeError("injected batch failure")
+        write_meta(state_dir, batch_id, mx)
+
+    monkeypatch.setattr(st, "_write_meta", failing)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persistent())
+    q = start(stream, state, ckpt)
+    with pytest.raises(Exception):
+        q.awaitTermination(300)
+    assert len(calls) == 2
+    assert len(persistent()) == before
+
+
+def test_stream_stream_join_replay_leaves_caller_conf_alone(spark,
+                                                            sf_small):
+    """The replay skips no-data micro-batches in a session of its own:
+    a second thread polling the caller's session conf during the whole
+    replay never reads the flipped value."""
+    import threading
+    import time
+
+    from __spark_entry__ import queries
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    seen, done = set(), threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key, "true"))
+            time.sleep(0.002)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        rows = queries()["stream_stream_join_replay"](
+            spark, sf_small).collect()
+    finally:
+        done.set()
+        poller.join()
+    assert seen == {"true"}
+    assert rows
